@@ -29,7 +29,7 @@ from fastie_spark.derive import (
 )
 from fastie_spark.fixtures import NER_LABELS, PREDICATES
 from fastie_spark.linking import link_triples
-from fastie_spark.pipeline import run_extraction
+from fastie_spark.pipeline import run_extraction_fused
 from fastie_spark.session import local_df
 from fastie_spark.textops import REGISTRY
 
@@ -55,10 +55,8 @@ def _kg(spark: SparkSession, sf_dir: str) -> dict:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     vocab, toks = derived_vocab(spark, docs)
     pages = docs_as_pages(docs)
-    ext = run_extraction(spark, pages, vocab, persist=True)  # one UDF pass
-    mentions = ext["mentions"]
-    triples = ext["triples"].persist()  # feeds linking chain repeatedly
-    events = ext["events"]
+    # one UDF pass; mentions/triples/events are filters over its cached rows
+    ext = run_extraction_fused(spark, pages, vocab, from_html=False, persist=True)
 
     linker = local_df(
         spark, derived_linker_rows(toks),
@@ -69,7 +67,7 @@ def _kg(spark: SparkSession, sf_dir: str) -> dict:
     # (case/width-equal tokens) must not merge ids here
     # broadcast pinned: the derived dict is fixture-sized; "auto"'s probe
     # would add an eager count job to every fresh _kg build
-    linked = link_triples(triples, linker, normalize=False,
+    linked = link_triples(ext["triples"], linker, normalize=False,
                           strategy="broadcast").select(
         "url", "subj", "pred", "obj", "subj_id", "obj_id"
     ).persist()
@@ -90,9 +88,9 @@ def _kg(spark: SparkSession, sf_dir: str) -> dict:
     )
 
     out = {
-        "mentions": mentions,
-        "triples": triples,
-        "events": events,
+        "mentions": ext["mentions"],
+        "triples": ext["triples"],
+        "events": ext["events"],
         "linked": linked,
         "linker": linker,
         "components": components,

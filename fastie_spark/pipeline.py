@@ -1,34 +1,30 @@
-"""Extraction pipeline: pages -> chunks -> (tokenize+score+decode) -> rejoin.
+"""Extraction pipeline: pages -> one fused Arrow stage -> mention/triple/event rows.
 
-Spark-first design notes (the judge-facing architecture rationale):
+Spark-first design notes (the architecture rationale):
 
-- **Chunking is relational** (no UDF): fixed-window ``auto_splitter``
-  semantics (split_sentence=False — reference default,
-  /root/reference/fastie/models/named_entity_recognition/global_pointer/
-  decode_utils.py:70-106) become ``sequence + transform + substring +
-  explode``; ``char_base = chunk_idx * 510`` reproduces the J1 rejoin shift
-  (cumulative chunk char length) exactly, because fixed windows make the
-  cumulative sum closed-form. Catalyst codegens the whole stage.
-
-- **Tokenize + score + decode are fused into ONE mapInPandas stage.** The
-  token ids / offset maps / score grids never become DataFrame columns — they
-  are intermediate per-chunk state inside the Arrow batch, so nothing
-  O(L) or O(L^2) is ever shuffled. The stage's output is already the small
-  mention/triple/event relation. At 100 TB this is the difference between
-  shuffling kilobytes per doc and shuffling nothing but results.
+- **One Python stage per page.** html->text, chunking (P6), space masking
+  (P3), tokenize (T1), score and decode (M1/M8/M14) all run inside ONE
+  ``mapInArrow`` pass, one input row per page. Token ids, offset maps and
+  score grids never become DataFrame columns, so nothing O(L) or O(L^2) is
+  ever shuffled; the stage's output is already the small
+  mention/triple/event relation, read and written as Arrow arrays with no
+  pandas block on either side of the boundary.
 
 - **Explicit url-hash repartition** before the heavy stage (input_hint):
-  co-locates all chunks of a url, sizes tasks evenly, and makes the
-  downstream per-url dedup/groupBy cheap.
+  sizes tasks evenly when the source's own splits are skewed. The stage is
+  per-document, so co-location is never needed for correctness.
 
-- **Chunk rejoin**: mention offsets are shifted by ``char_base`` inside the
-  UDF (J1). Mentions need no dedup (chunks cover disjoint char ranges and
-  each chunk's decode already returns a set, so a global mention tuple can
-  arise only once). Triples keep reference J2 semantics (plain set union
-  per url, offsets dropped) = one ``dropDuplicates`` shuffle on
-  (url, subj, pred, obj). Events are decoded on chunk 0 only — the
-  reference event driver truncates instead of chunking
+- **Chunk rejoin inside the stage.** Mention offsets are shifted by the
+  chunk's char base (J1). Triples keep the reference J2 semantics (plain
+  set union per url, offsets dropped) as an in-memory set per document, so
+  no dedup shuffle is needed. Events are decoded on the document's first
+  ``max_length - 2`` chars, whatever the chunk mode: the reference event
+  driver truncates instead of chunking
   (.../event_extraction/gplinker/decode_utils.py:104-136).
+
+- ``chunk_pages`` is the same fixed-window chunking as a relational
+  operator (``sequence + transform + substring + explode``, no UDF), with
+  ``char_base = chunk_idx * 510`` reproducing the J1 shift in closed form.
 """
 
 from __future__ import annotations
@@ -36,17 +32,10 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .decoders import (
-    event_decode_cells,
-    event_decode_from_argus,
-    event_set2json,
-    gp_decode_cells,
-    gplinker_decode_cells,
-)
+from .decoders import event_decode_from_argus, event_set2json, gplinker_decode_cells
 from .scorer import DictScorer, Vocab
 from .tokenizer import encode_meta as encode
 
@@ -98,104 +87,18 @@ def _event_key(url: str, etype: str, trigger: str, args: list) -> str:
     return hashlib.md5((url + "\x1d" + canon).encode("utf-8")).hexdigest()
 
 
-def make_extract_fn(vocab: Vocab, max_length: int = MAX_LENGTH,
-                    do_events: bool = True):
-    """Fused tokenize+score+decode mapInPandas function. The scorer and
-    label maps are built once per PYTHON WORKER (executor_init worker cache
-    keyed by vocab fingerprint — the Spark analogue of per-worker model
-    load), so repeated tasks on a reused worker pay zero init."""
-    from .executor_init import get_or_build
-
-    cache_key = f"dict_scorer|{vocab.fingerprint()}|{max_length}"
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        scorer, ner_id2label, re_id2pred, event_id2label = get_or_build(
-            cache_key,
-            lambda: (
-                DictScorer(vocab, max_length),
-                dict(enumerate(vocab.ner_labels())),
-                dict(enumerate(vocab.predicates())),
-                dict(enumerate(vocab.event_labels())),
-            ),
-        )
-
-        for pdf in batches:
-            rows = []
-            for url, chunk_idx, char_base, chunk in zip(
-                pdf["url"], pdf["chunk_idx"], pdf["char_base"], pdf["chunk_text"]
-            ):
-                masked = chunk.replace(" ", "-")  # P3
-                enc = encode(masked, max_length)
-                l, mapping = enc["seq_len"], enc["offset_mapping"]
-
-                # M1 mentions (offsets shifted by char_base = J1 rejoin)
-                for lbl, s, e, surf in gp_decode_cells(
-                    scorer.ner_cells(masked), l, chunk, mapping, ner_id2label
-                ):
-                    rows.append(
-                        (url, "mention", lbl, s + char_base, e + char_base,
-                         surf, None, None, None, None, None, None, None, None)
-                    )
-
-                # M8 triples
-                ent, head, tail = scorer.re_cells(masked)
-                for pred, subj, obj in gplinker_decode_cells(
-                    ent, head, tail, l, chunk, mapping, re_id2pred
-                ):
-                    rows.append(
-                        (url, "triple", None, None, None, None,
-                         subj, pred, obj, None, None, None, None, None)
-                    )
-
-                # M14/M15 events — reference truncates, never chunks
-                if do_events and chunk_idx == 0:
-                    argu, eh, et = scorer.event_cells(masked)
-                    events = event_decode_cells(
-                        argu, eh, et, l, chunk, mapping, event_id2label
-                    )
-                    for ev in event_set2json(events):
-                        args = [(a["role"], a["argument"]) for a in ev["arguments"]]
-                        key = _event_key(url, ev["event_type"], ev.get("trigger"), args)
-                        for role, arg in args:
-                            rows.append(
-                                (url, "event", None, None, None, None,
-                                 None, None, None, ev["event_type"],
-                                 ev.get("trigger"), role, arg, key)
-                            )
-                        if not args:  # trigger-only event still exists
-                            rows.append(
-                                (url, "event", None, None, None, None,
-                                 None, None, None, ev["event_type"],
-                                 ev.get("trigger"), None, None, key)
-                            )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "kind", "label", "start", "end", "surface",
-                    "subj", "pred", "obj", "event_type", "trigger", "role",
-                    "argument", "event_key",
-                ],
-            )
-
-    return fn
-
-
-def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
-                         do_events: bool = True, from_html: bool = True,
-                         split_sentence: bool = False, vocab_bc=None,
-                         init_acc=None):
-    """Whole-document fused stage: html->text (P-extract), chunking (P6),
-    space-mask (P3), tokenize (T1), score, decode (M1/M8/M14), chunk-rejoin
-    (J1/J2) — all inside ONE Arrow batch pass, one row per page in.
-    Returns (setup, process): setup() resolves the per-worker scorer ctx,
-    process(urls, srcs, ctx) -> row tuples; the mapInPandas / mapInArrow
-    wrappers below share them.
-
-    Why fused: each extra python stage costs a JVM<->Arrow boundary and a
-    scheduler barrier, and the J2 per-doc set union becomes a free in-memory
-    dedup here (urls are unique, so no global dedup shuffle is needed at
-    all). The relational chunker in chunk_pages stays available as a
-    standalone operator; this is the throughput path for the e2e job.
+def make_fused_doc_arrow_fn(vocab: Vocab, max_length: int = MAX_LENGTH,
+                            do_events: bool = True, from_html: bool = True,
+                            split_sentence: bool = False, vocab_bc=None,
+                            init_acc=None):
+    """The fused stage as a ``mapInArrow`` function. Each input record
+    batch carries ``url`` plus ``html`` (``text`` when ``from_html=False``);
+    each page runs html->text, chunking (P6, or P5 sentence splitting with
+    ``split_sentence``), space masking (P3), tokenize (T1), score, decode
+    (M1/M8/M14) and chunk rejoin (J1/J2), and each input batch yields one
+    EXTRACT_SCHEMA record batch. A null source, or html that does not
+    decode, yields no rows: real crawls carry garbage bytes, and one poison
+    page must not kill the task.
 
     Model init is per-PYTHON-WORKER, not per task: the scorer + label maps
     are built lazily through executor_init.get_or_build keyed by the vocab
@@ -204,6 +107,8 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
     (SURVEY §3.2). Pass ``vocab_bc`` (a Broadcast of the Vocab) to ship the
     artifacts once per executor instead of once per task closure, and
     ``init_acc`` (an accumulator) to observe actual build counts."""
+    import pyarrow as pa
+
     from .chunking import auto_splitter, char_bases, split_one
     from .executor_init import get_or_build
     from .text_extract import extract_text_py
@@ -213,41 +118,38 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
         f"|{max_length}"
     )
     ship_vocab = None if vocab_bc is not None else vocab
+    src_col = "html" if from_html else "text"
+    fields = [f.split() for f in EXTRACT_SCHEMA.split(", ")]
+    names = [n for n, _ in fields]
+    types = [pa.int64() if t == "long" else pa.string() for _, t in fields]
 
-    def setup():
-        def build():
-            v = vocab_bc.value if vocab_bc is not None else ship_vocab
-            return (
-                DictScorer(v, max_length),
-                dict(enumerate(v.ner_labels())),
-                dict(enumerate(v.predicates())),
-                dict(enumerate(v.event_labels())),
-            )
+    def build():
+        v = vocab_bc.value if vocab_bc is not None else ship_vocab
+        return (
+            DictScorer(v, max_length),
+            dict(enumerate(v.ner_labels())),
+            dict(enumerate(v.predicates())),
+        )
 
-        return get_or_build(cache_key, build, init_acc)
-
-    def process(urls, srcs, ctx) -> list:
-        """The per-doc extract->score->decode loop over one batch; shared by
-        the pandas (make_fused_doc_fn) and arrow (make_fused_doc_arrow_fn)
-        wrappers so the two boundaries cannot drift semantically."""
-        scorer, ner_id2label, re_id2pred, event_id2label = ctx
+    def fn(batches) -> Iterator["pa.RecordBatch"]:
+        scorer, ner_id2label, re_id2pred = get_or_build(
+            cache_key, build, init_acc)
         # affix-free vocabularies take the fused scorer fast paths
         # (mentions_fast always valid; triples_fast needs the gate — see
         # scorer.py proof sketches); other vocabs keep the generic
         # grid-build + decode, output-identical by the parity tests
         fast_re = scorer._affix_free
-        rows = []
-        if True:
-            for url, src in zip(urls, srcs):
+        for batch in batches:
+            rows = []
+            for url, src in zip(batch.column("url").to_pylist(),
+                                batch.column(src_col).to_pylist()):
+                if src is None:
+                    continue
                 if from_html:
                     try:
                         text = extract_text_py(src)
                     except (UnicodeDecodeError, ValueError, TypeError,
                             AttributeError):
-                        # real crawls carry garbage bytes; a poison page must
-                        # not kill the task — it just yields no extractions
-                        # (the byte-identity contract applies to well-formed
-                        # pages and is asserted separately in tests)
                         continue
                 else:
                     text = src
@@ -255,10 +157,7 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
                     chunks, _ = auto_splitter([text], max_length - 2, True)
                 else:
                     chunks = split_one(text, max_length - 2)
-                bases = char_bases(chunks)
                 if do_events:
-                    # reference event driver truncates the DOC (no chunking,
-                    # decode_utils.py:104-136) — independent of chunk mode.
                     # Only the first max_length-2 chars are decodable (the
                     # scorer truncation-filters spans to that prefix and
                     # seq_len caps there), so mask and scan ONLY the prefix:
@@ -268,36 +167,29 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
                     # the chunk loop's first occurrence scan is served from
                     # the scorer memo instead of re-scanning.
                     masked = text[: max_length - 2].replace(" ", "-")
-                    enc = encode(masked, max_length)
-                    l, mapping = enc["seq_len"], enc["offset_mapping"]
-                    # fused event path: argus come out of the scorer already
-                    # decoded (event_views), skipping the per-cell label
-                    # split + dead bound checks of the generic decode
+                    mapping = encode(masked, max_length)["offset_mapping"]
+                    # argus come out of the scorer already decoded
+                    # (event_views), skipping the per-cell label split +
+                    # dead bound checks of the generic decode
                     argus, eh, et = scorer.event_views(masked)
                     for ev in event_set2json(
                         event_decode_from_argus(argus, eh, et, text, mapping)
                     ):
-                            args = [(a["role"], a["argument"])
-                                    for a in ev["arguments"]]
-                            key = _event_key(url, ev["event_type"],
-                                             ev.get("trigger"), args)
-                            for role, arg in args:
-                                rows.append(
-                                    (url, "event", None, None, None, None,
-                                     None, None, None, ev["event_type"],
-                                     ev.get("trigger"), role, arg, key)
-                                )
-                            if not args:  # trigger-only event still exists
-                                rows.append(
-                                    (url, "event", None, None, None, None,
-                                     None, None, None, ev["event_type"],
-                                     ev.get("trigger"), None, None, key)
-                                )
+                        etype, trigger = ev["event_type"], ev.get("trigger")
+                        args = [(a["role"], a["argument"])
+                                for a in ev["arguments"]]
+                        key = _event_key(url, etype, trigger, args)
+                        # a trigger-only event still exists: one null-role row
+                        for role, arg in args or [(None, None)]:
+                            rows.append(
+                                (url, "event", None, None, None, None, None,
+                                 None, None, etype, trigger, role, arg, key)
+                            )
                 doc_triples: set = set()
-                for chunk, base in zip(chunks, bases):
+                for chunk, base in zip(chunks, char_bases(chunks)):
                     masked = chunk.replace(" ", "-")
                     enc = encode(masked, max_length)
-                    l, mapping = enc["seq_len"], enc["offset_mapping"]
+                    mapping = enc["offset_mapping"]
                     for lbl, s, e, surf in scorer.mentions_fast(
                         masked, chunk, mapping, ner_id2label
                     ):
@@ -312,87 +204,17 @@ def _fused_doc_processor(vocab: Vocab, max_length: int = MAX_LENGTH,
                     else:
                         ent, head, tail = scorer.re_cells(masked)
                         doc_triples |= gplinker_decode_cells(
-                            ent, head, tail, l, chunk, mapping, re_id2pred
+                            ent, head, tail, enc["seq_len"], chunk, mapping,
+                            re_id2pred,
                         )
                 for pred, subj, obj in doc_triples:  # J2 union done in-doc
                     rows.append(
                         (url, "triple", None, None, None, None,
                          subj, pred, obj, None, None, None, None, None)
                     )
-        return rows
-
-    return setup, process
-
-
-_EXTRACT_COLS = [
-    "url", "kind", "label", "start", "end", "surface",
-    "subj", "pred", "obj", "event_type", "trigger", "role",
-    "argument", "event_key",
-]
-
-
-def make_fused_doc_fn(vocab: Vocab, max_length: int = MAX_LENGTH,
-                      do_events: bool = True, from_html: bool = True,
-                      split_sentence: bool = False, vocab_bc=None,
-                      init_acc=None):
-    """mapInPandas wrapper over _fused_doc_processor (see its docstring).
-    Kept for API compatibility; the e2e job uses the arrow wrapper below,
-    which skips the pandas intermediate on both sides of the boundary."""
-    setup, process = _fused_doc_processor(
-        vocab, max_length=max_length, do_events=do_events,
-        from_html=from_html, split_sentence=split_sentence,
-        vocab_bc=vocab_bc, init_acc=init_acc,
-    )
-    src_col = "html" if from_html else "text"
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = setup()
-        for pdf in batches:
-            rows = process(pdf["url"], pdf[src_col], ctx)
-            yield pd.DataFrame(rows, columns=_EXTRACT_COLS)
-
-    return fn
-
-
-def make_fused_doc_arrow_fn(vocab: Vocab, max_length: int = MAX_LENGTH,
-                            do_events: bool = True, from_html: bool = True,
-                            split_sentence: bool = False, vocab_bc=None,
-                            init_acc=None):
-    """mapInArrow wrapper over the SAME per-doc processor: input columns are
-    read straight off the Arrow record batch and output rows become Arrow
-    arrays directly — no pandas block building on either side (guide-§4
-    Python-boundary cost; measured ~35 ms per 58k output rows for the
-    DataFrame construction alone, plus the serializer's pandas->arrow
-    conversion on top). Row content is byte-identical to the pandas
-    wrapper because both call one `process`."""
-    import pyarrow as pa
-
-    setup, process = _fused_doc_processor(
-        vocab, max_length=max_length, do_events=do_events,
-        from_html=from_html, split_sentence=split_sentence,
-        vocab_bc=vocab_bc, init_acc=init_acc,
-    )
-    src_col = "html" if from_html else "text"
-    types = [
-        pa.int64() if c in ("start", "end") else pa.string()
-        for c in _EXTRACT_COLS
-    ]
-
-    def fn(batches) -> Iterator["pa.RecordBatch"]:
-        ctx = setup()
-        for batch in batches:
-            rows = process(
-                batch.column("url").to_pylist(),
-                batch.column(src_col).to_pylist(),
-                ctx,
-            )
-            cols = (
-                list(zip(*rows)) if rows
-                else [[] for _ in _EXTRACT_COLS]
-            )
+            cols = list(zip(*rows)) if rows else [[] for _ in names]
             yield pa.RecordBatch.from_arrays(
-                [pa.array(v, type=t) for v, t in zip(cols, types)],
-                names=_EXTRACT_COLS,
+                [pa.array(v, type=t) for v, t in zip(cols, types)], names=names,
             )
 
     return fn
@@ -412,10 +234,14 @@ def run_extraction_fused(
     broadcast_vocab: bool = False,
     init_acc=None,
 ) -> dict:
-    """Fused-stage variant of run_extraction. pages needs (url, html) when
-    from_html else (url, text). Triples come out already per-doc-deduped
-    (J2), so no dropDuplicates shuffle. split_sentence enables the P5
-    sentence-level auto_splitter chunking (reference flag, default off).
+    """pages -> {'mentions', 'triples', 'events', '_raw'} DataFrames through
+    the one fused ``mapInArrow`` stage (make_fused_doc_arrow_fn). pages
+    needs (url, html) when from_html else (url, text). The three outputs
+    are filters over ``_raw``, the stage's output (persisted when
+    ``persist``). Triples come out already per-doc-deduped (J2), so there is
+    no dedup shuffle; with unique urls they are the set of distinct
+    (url, subj, pred, obj). split_sentence enables the P5 sentence-level
+    auto_splitter chunking (reference flag, default off).
 
     repartition=False skips the explicit url-hash shuffle: the fused stage
     is per-document, so co-location is not needed for correctness — only
@@ -447,33 +273,5 @@ def run_extraction_fused(
         raw = raw.persist()
     mentions = raw.filter(F.col("kind") == "mention").select(*MENTION_COLS)
     triples = raw.filter(F.col("kind") == "triple").select(*TRIPLE_COLS)
-    events = raw.filter(F.col("kind") == "event").select(*EVENT_COLS)
-    return {"mentions": mentions, "triples": triples, "events": events, "_raw": raw}
-
-
-def run_extraction(
-    spark: SparkSession,
-    pages: DataFrame,
-    vocab: Vocab,
-    num_partitions: int | None = None,
-    do_events: bool = True,
-    persist: bool = True,
-) -> dict:
-    """pages(url, text[, html...]) -> {'mentions','triples','events'} DFs."""
-    parts = num_partitions or spark.sparkContext.defaultParallelism
-    chunks = chunk_pages(repartition_by_url(pages.select("url", "text"), parts))
-    raw = chunks.mapInPandas(
-        make_extract_fn(vocab, do_events=do_events), schema=EXTRACT_SCHEMA
-    )
-    if persist:
-        raw = raw.persist()
-
-    mentions = raw.filter(F.col("kind") == "mention").select(*MENTION_COLS)
-    # J2: per-url set union == dedup on the full triple key
-    triples = (
-        raw.filter(F.col("kind") == "triple")
-        .select(*TRIPLE_COLS)
-        .dropDuplicates(TRIPLE_COLS)
-    )
     events = raw.filter(F.col("kind") == "event").select(*EVENT_COLS)
     return {"mentions": mentions, "triples": triples, "events": events, "_raw": raw}

@@ -46,11 +46,3 @@ def salted_collect_set(
         arr = F.slice(arr, 1, max_items)
     return merged.select(key, arr.alias(f"{value}_set"))
 
-
-def salted_count(df: DataFrame, key: str, n_salts: int = 16,
-                 unique_col: str | None = None) -> DataFrame:
-    """count(*) by key in two stages. (Plain count is already map-side
-    combinable; this exists for symmetry and as the pattern template.)"""
-    salted = with_salt(df, n_salts, unique_col or key)
-    partial = salted.groupBy(key, SALT_COL).agg(F.count("*").alias("__n"))
-    return partial.groupBy(key).agg(F.sum("__n").cast("long").alias("n"))

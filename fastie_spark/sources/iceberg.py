@@ -13,21 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-def iceberg_session_conf(warehouse: str) -> dict:
-    """Catalog wiring for get_spark(extra_conf=...). Session extensions and
-    catalogs must be set BEFORE session creation — build the session with
-    this conf (plus the runtime jar on the classpath) to enable the
-    graph.* tables; without it write_table/read_table use the parquet
-    fallback."""
-    return {
-        "spark.sql.extensions":
-            "org.apache.iceberg.spark.extensions."
-            "IcebergSparkSessionExtensions",
-        "spark.sql.catalog.graph": "org.apache.iceberg.spark.SparkCatalog",
-        "spark.sql.catalog.graph.type": "hadoop",
-        "spark.sql.catalog.graph.warehouse": warehouse,
-    }
-
 
 def iceberg_available(spark: SparkSession) -> bool:
     try:
